@@ -1879,7 +1879,7 @@ def oracle_sql() -> dict[str, str]:
                        CAST(md5_number_upper(CAST(doc_id AS VARCHAR)
                                              || '#prio')
                             & 4503599627370495 AS BIGINT) | 1 AS u
-                FROM documents),
+                FROM documents WHERE doc_id IS NOT NULL),
             s AS (SELECT source, doc_id, w, (u * 1024) // w AS s FROM h),
             r AS (SELECT source, doc_id, w, s,
                          row_number() OVER (PARTITION BY source
@@ -1900,7 +1900,7 @@ def oracle_sql() -> dict[str, str]:
                        CAST(md5_number_upper(CAST(doc_id AS VARCHAR)
                                              || '#prio')
                             & 4503599627370495 AS BIGINT) | 1 AS u
-                FROM documents),
+                FROM documents WHERE doc_id IS NOT NULL),
             s AS (SELECT source, doc_id, w, (u * 1024) // w AS s FROM h),
             r AS (SELECT source, w, s,
                          row_number() OVER (PARTITION BY source

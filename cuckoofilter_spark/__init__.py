@@ -23,6 +23,9 @@ and merges are tree-shaped — no driver-side per-row loops anywhere.
 
 __version__ = "0.2.0"
 
+# first: every UDF unpickles through this package, which is how each
+# Python worker gets the once-per-process fix (see _worker_env)
+from . import _worker_env  # noqa: F401
 from .kernels.blocked_bloom import BlockedBloomFilter, GrowBlockedBloomFilter
 from .kernels.bloom import BloomFilter
 from .kernels.cms import CountMinSketch

@@ -409,6 +409,11 @@ def embedding_centroids(emb: DataFrame, vec_col: str, group_col: str,
       var_micro2 = (n * sum(xm^2) - sum(xm)^2) div n^2 — the
       population variance of the quantized coordinates.
 
+    NULL coordinates: a NULL element of a non-NULL vector still counts
+    toward that dim's n_vecs but adds 0 to its sums (count(1) vs
+    sum-skips-NULL), so centroid_micro and var_micro2 treat it as a 0
+    coordinate; the DuckDB oracle does the same.
+
     Engine-reproducibility: float sums are order-dependent (Spark's
     partial aggregation order is nondeterministic), so each coordinate
     is quantized ONCE to an integer (round of the same IEEE double in

@@ -1,6 +1,8 @@
 """Round-5 surfaces: shared near-dup pair graph memo, GCS multi-code
 windowed decode, packing column-collision guards, bench summary line."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -695,10 +697,10 @@ def test_priority_sum_estimate_matches_manual(spark):
     samp = priority_sample(df, "id", "wgt", "grp", k=64).collect()
     s_k1 = next(r["_s"] for r in samp if r["grp"] == "s" and r["rk"] == 65)
     tau = float(1 << 62) / float(s_k1)
-    want = sum(int(round(max(float(r["_w"]), tau) * 1e6))
+    want = sum(math.floor(max(float(r["_w"]), tau) * 1e6 + 0.5)
                for r in samp if r["grp"] == "s" and r["in_sample"])
     assert got["s"]["est_micro"] == want
-    assert got["s"]["tau_micro"] == int(round(tau * 1e6))
+    assert got["s"]["tau_micro"] == math.floor(tau * 1e6 + 0.5)
     assert got["s"]["n_rows"] == 64
     exact = sum(w for _, w, g in rows if g == "s")
     assert abs(got["s"]["est_micro"] / 1e6 - exact) / exact < 0.15

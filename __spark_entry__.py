@@ -89,13 +89,14 @@ def q_cf_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cuckoo-filter semi-join: which part keys are members of the
     l_partkey<1000 set. 16-bit tags; zero FP on this keyspace verified
     for SEED (deterministic). SURVEY §2.1 #3/#5."""
-    from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = cuckoo_build(li, "l_partkey", capacity=1000, bits=16, seed=SEED,
                         num_shards=8)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", cuckoo_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -216,15 +217,16 @@ def q_cf_delete_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_partkey<1000, delete the <500 subset, probe part — survivors are
     exactly [500,1000) members. Anti-join maintenance; zero FP/FN on
     this keyspace verified for SEED at 16-bit tags."""
+    from cuckoofilter_spark.sketch.api import contains_col
     from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col, cuckoo_delete)
+        cuckoo_build, cuckoo_delete)
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = cuckoo_build(li, "l_partkey", capacity=1000, bits=16, seed=SEED,
                         num_shards=8)
     cuckoo_delete(filt, li.where(F.col("l_partkey") < 500), "l_partkey")
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", cuckoo_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -237,14 +239,14 @@ def q_shingle_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     on this keyspace — the same per-query seed pinning every membership
     oracle here relies on). Deletable at 12/12.75 load — load-bound and
     delete semantics exercised in tests/test_round3.py."""
-    from cuckoofilter_spark.sketch.membership import (
-        shingle_build, shingle_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import shingle_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = shingle_build(li, "l_partkey", capacity=1000, slot_bits=16,
                          seed=SEED + 1, num_shards=8)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", shingle_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -257,15 +259,15 @@ def q_crate_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     the widenable-fingerprint families — the oracle therefore checks
     the exact true-member count (no false negatives) plus a
     Spark-verified FP-bound flag, the cf_mixed_probe protocol."""
-    from cuckoofilter_spark.sketch.membership import (
-        crate_build, crate_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import crate_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = crate_build(li, "l_partkey", capacity=1000, seed=SEED,
                        num_shards=8)
     part = _t(spark, sf_dir, "part")
     members = li.select(F.col("l_partkey").alias("p_partkey")).distinct()
-    probed = (part.withColumn("hit", crate_contains_col(spark, filt, "p_partkey"))
+    probed = (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
               .join(F.broadcast(members.withColumn("is_member", F.lit(True))),
                     "p_partkey", "left")
               .withColumn("is_member", F.coalesce("is_member", F.lit(False))))
@@ -293,14 +295,14 @@ def q_tail_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     path actually runs in the gate; tb=20 tail bits keep the
     structure-derived FPR ~3e-6, zero FP on this keyspace (verified
     deterministic for SEED at sf0.01/sf0.1)."""
-    from cuckoofilter_spark.sketch.membership import (
-        tail_build, tail_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import tail_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = tail_build(li, "l_partkey", epsilon=2.0 ** -20, lgm=5,
                       seed=SEED, num_shards=8)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", tail_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -308,7 +310,8 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom semi-join over l_suppkey with present+absent probes.
     bloom.h semantics; bits sized so FP=0 on this keyspace (verified
     deterministic for SEED)."""
-    from cuckoofilter_spark.sketch.aggregates import bloom_contains_col, bloom_sketch
+    from cuckoofilter_spark.sketch.aggregates import bloom_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
@@ -319,15 +322,15 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
                         bits_per_item=16, seed=SEED)
     probes = (sup.select(F.col("s_suppkey").alias("probe"))
               .unionAll(sup.select((F.col("s_suppkey") + 100).alias("probe"))))
-    return (probes.withColumn("hit", bloom_contains_col(spark, filt, "probe"))
+    return (probes.withColumn("hit", contains_col(spark, filt, "probe"))
             .where("hit").select(F.col("probe").alias("member_key")))
 
 
 def q_blocked_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked-Bloom (simd-block.h 256-bit buckets) semi-join over
     l_suppkey; sized so FP=0 on this keyspace (verified for SEED)."""
-    from cuckoofilter_spark.sketch.aggregates import (
-        blocked_bloom_contains_col, blocked_bloom_sketch)
+    from cuckoofilter_spark.sketch.aggregates import blocked_bloom_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
@@ -335,7 +338,7 @@ def q_blocked_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     filt = blocked_bloom_sketch(li, "l_suppkey", capacity=int(cap * 4) + 64, seed=SEED)
     probes = (sup.select(F.col("s_suppkey").alias("probe"))
               .unionAll(sup.select((F.col("s_suppkey") + 100).alias("probe"))))
-    return (probes.withColumn("hit", blocked_bloom_contains_col(spark, filt, "probe"))
+    return (probes.withColumn("hit", contains_col(spark, filt, "probe"))
             .where("hit").select(F.col("probe").alias("member_key")))
 
 
@@ -365,8 +368,8 @@ def q_blocked_bloom64_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-byte-block blocked Bloom (SimdBlockFilter64, simd-block.h:
     213-375: 512-bit buckets, one bit per 64-bit lane) semi-join over
     l_suppkey; sized so FP=0 on this keyspace (verified for SEED)."""
-    from cuckoofilter_spark.sketch.aggregates import (
-        blocked_bloom64_contains_col, blocked_bloom64_sketch)
+    from cuckoofilter_spark.sketch.aggregates import blocked_bloom64_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
@@ -376,7 +379,7 @@ def q_blocked_bloom64_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (sup.select(F.col("s_suppkey").alias("probe"))
               .unionAll(sup.select((F.col("s_suppkey") + 100).alias("probe"))))
     return (probes.withColumn(
-        "hit", blocked_bloom64_contains_col(spark, filt, "probe"))
+        "hit", contains_col(spark, filt, "probe"))
         .where("hit").select(F.col("probe").alias("member_key")))
 
 
@@ -386,8 +389,8 @@ def q_fixed_blocked_bloom_membership(spark: SparkSession,
     simd-block-fixed-fpp.h:43-138: exact non-pow2 directory, Lemire
     bucket index) semi-join over l_suppkey at 20 bits/key — spent
     exactly, no pow2 round; FP=0 on this keyspace for SEED."""
-    from cuckoofilter_spark.sketch.aggregates import (
-        fixed_blocked_bloom_contains_col, fixed_blocked_bloom_sketch)
+    from cuckoofilter_spark.sketch.aggregates import fixed_blocked_bloom_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
@@ -398,7 +401,7 @@ def q_fixed_blocked_bloom_membership(spark: SparkSession,
     probes = (sup.select(F.col("s_suppkey").alias("probe"))
               .unionAll(sup.select((F.col("s_suppkey") + 100).alias("probe"))))
     return (probes.withColumn(
-        "hit", fixed_blocked_bloom_contains_col(spark, filt, "probe"))
+        "hit", contains_col(spark, filt, "probe"))
         .where("hit").select(F.col("probe").alias("member_key")))
 
 
@@ -414,8 +417,8 @@ def q_grow_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant. The oracle uses the crate protocol: exact member count
     (no false negatives, guaranteed) + a Spark-verified FP-bound
     flag."""
-    from cuckoofilter_spark.sketch.aggregates import (
-        grow_blocked_bloom_contains_col, grow_blocked_bloom_sketch)
+    from cuckoofilter_spark.sketch.aggregates import grow_blocked_bloom_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
@@ -425,7 +428,7 @@ def q_grow_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
               .unionAll(sup.select((F.col("s_suppkey") + 100).alias("probe"))))
     members = li.select(F.col("l_suppkey").alias("probe")).distinct()
     probed = (probes.withColumn(
-        "hit", grow_blocked_bloom_contains_col(spark, filt, "probe"))
+        "hit", contains_col(spark, filt, "probe"))
         .join(F.broadcast(members.withColumn("is_member", F.lit(True))),
               "probe", "left")
         .withColumn("is_member", F.coalesce("is_member", F.lit(False))))
@@ -453,8 +456,9 @@ def q_cf_prefilter_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The union equals the plain exact anti-join regardless of the
     filter's epsilon. Money sums are aggregated as exact integer cents
     so the cross-engine comparison is bit-exact by construction."""
+    from cuckoofilter_spark.sketch.api import contains_col
     from cuckoofilter_spark.sketch.membership import (
-        approx_anti_join, cuckoo_build, cuckoo_contains_col)
+        approx_anti_join, cuckoo_build)
 
     cust = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 10 == 0)
     orders = _t(spark, sf_dir, "orders")
@@ -462,7 +466,7 @@ def q_cf_prefilter_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                         bits=12, seed=SEED, num_shards=8)
     definite_miss = approx_anti_join(spark, orders, "o_custkey", filt)
     recovered = (orders
-                 .where(cuckoo_contains_col(spark, filt, "o_custkey"))
+                 .where(contains_col(spark, filt, "o_custkey"))
                  .join(F.broadcast(
                      cust.select(F.col("c_custkey").alias("o_custkey"))),
                      "o_custkey", "left_anti"))
@@ -477,12 +481,13 @@ def q_gcs_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golomb-coded-sequence filter (gcs.h) semi-join, built via the
     distributed sort-encode plan; log2fpp=16 so FP=0 on this keyspace
     (verified for SEED)."""
-    from cuckoofilter_spark.sketch.gcsfilter import gcs_build, gcs_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.gcsfilter import gcs_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = gcs_build(li, "l_partkey", log2fpp=16, seed=SEED)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", gcs_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -511,7 +516,8 @@ def q_cf_mixed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bulk-insert-and-query.cc:615-618): deterministic probe composition,
     counts by ground-truth label and filter answer."""
     from cuckoofilter_spark.ops.dataflow import mix_in
-    from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
@@ -521,7 +527,7 @@ def q_cf_mixed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                         bits=16, seed=SEED, num_shards=8)
     negatives = part.selectExpr("p_partkey + 10000000 AS k")
     probes = mix_in(li.selectExpr("l_partkey AS k"), negatives, "k", 50)
-    return (probes.withColumn("hit", cuckoo_contains_col(spark, filt, "probe"))
+    return (probes.withColumn("hit", contains_col(spark, filt, "probe"))
             .groupBy("expected_hit", "hit").agg(F.count("*").alias("cnt")))
 
 
@@ -529,12 +535,13 @@ def q_xor_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static xor-filter semi-join (xorfilter.h AddAll/Contain):
     distributed dedupe -> driver peel -> broadcast probe. 16-bit
     fingerprints; zero FP on this keyspace verified for SEED."""
-    from cuckoofilter_spark.sketch.membership import xor_build, xor_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import xor_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = xor_build(li, "l_partkey", fp_bits=16, seed=SEED)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", xor_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -543,13 +550,13 @@ def q_xorplus_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank9-compressed third block — the space-optimal static AMQ of the
     family). 16-bit fingerprints; zero FP on this keyspace verified for
     SEED."""
-    from cuckoofilter_spark.sketch.membership import (
-        xorplus_build, xorplus_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import xorplus_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = xorplus_build(li, "l_partkey", fp_bits=16, seed=SEED)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", xorplus_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -557,13 +564,14 @@ def q_cf_stable_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable-sizing cuckoo variant (cuckoofilter_stable.h): non-2^n
     bucket count via Lemire reduce, ~12.8 bits/item at 0.94 load instead
     of up-to-2x pow2 rounding waste. Zero FP on this keyspace for SEED."""
-    from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     filt = cuckoo_build(li, "l_partkey", capacity=1000, bits=16, seed=SEED,
                         num_shards=8, stable=True)
     part = _t(spark, sf_dir, "part")
-    return (part.withColumn("hit", cuckoo_contains_col(spark, filt, "p_partkey"))
+    return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
             .where("hit").select(F.col("p_partkey").alias("member_key")))
 
 
@@ -571,13 +579,14 @@ def q_cf_semisort_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-sorted (PackedTable, bits=13) cuckoo membership: PermEncoding
     codeword blobs (packedtable.h/permencoding.h), ~12.6 bits/item at
     full load vs 16 unpacked. Zero FP on this keyspace for SEED."""
-    from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 100)
     filt = cuckoo_build(li, "l_suppkey", capacity=128, bits=13, seed=SEED,
                         num_shards=8, mode="semisort")
     sup = _t(spark, sf_dir, "supplier")
-    return (sup.withColumn("hit", cuckoo_contains_col(spark, filt, "s_suppkey"))
+    return (sup.withColumn("hit", contains_col(spark, filt, "s_suppkey"))
             .where("hit").select(F.col("s_suppkey").alias("member_key")))
 
 
@@ -588,7 +597,7 @@ def q_cf_checkpoint_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from cuckoofilter_spark.plans.checkpoint import cuckoo_build_checkpointed
-    from cuckoofilter_spark.sketch.membership import cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
 
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 1000)
     ckpt = tempfile.mkdtemp(prefix="cfckpt_")
@@ -599,7 +608,7 @@ def q_cf_checkpoint_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = _t(spark, sf_dir, "part")
         # the probe depends only on the broadcast blobs (driver-held), so
         # the checkpoint dir can be cleaned before lazy evaluation
-        return (part.withColumn("hit", cuckoo_contains_col(spark, filt, "p_partkey"))
+        return (part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
                 .where("hit").select(F.col("p_partkey").alias("member_key")))
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1173,15 +1182,15 @@ def q_spooky_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference, tests/test_bytehash.py); probing the member set itself
     makes the result exact via the no-false-negative guarantee, which
     the oracle restates directly."""
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
     from cuckoofilter_spark.sketch.strhash import spooky64_col
 
     d = (_t(spark, sf_dir, "documents")
          .withColumn("k", spooky64_col(
              F.concat(F.lit("doc"), F.col("doc_id").cast("string")))))
     filt = cuckoo_build(d, "k", bits=16, seed=SEED, num_shards=8)
-    return (d.withColumn("hit", cuckoo_contains_col(spark, filt, "k"))
+    return (d.withColumn("hit", contains_col(spark, filt, "k"))
             .where("hit").select(F.col("doc_id").alias("member_doc")))
 
 
@@ -1625,7 +1634,8 @@ def q_tokens_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens_table (sources/tokens.py) for the throughput headline."""
     from cuckoofilter_spark.ops.text import md5hex_to_le64, words
     from cuckoofilter_spark.sketch.aggregates import cms_sketch, hll_sketch, kll_sketch
-    from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     d = _t(spark, sf_dir, "documents")
     salt = f"#tok{SEED}"
@@ -1647,9 +1657,9 @@ def q_tokens_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_distinct = freq.count()
     cf = cuckoo_build(toks, "tokens", capacity=exact_distinct, bits=12,
                       seed=SEED, num_shards=8)
-    fn = freq.where(~cuckoo_contains_col(spark, cf, "t")).count()
+    fn = freq.where(~contains_col(spark, cf, "t")).count()
     neg = spark.range(1 << 30, (1 << 30) + 100_000)  # token ids are 30-bit
-    fp = neg.where(cuckoo_contains_col(spark, cf, "id")).count()
+    fp = neg.where(contains_col(spark, cf, "id")).count()
     hll = hll_sketch(toks, "tokens", p=14, seed=SEED)
     cms = cms_sketch(toks, "tokens", eps=0.001, delta=0.01, seed=SEED)
     top = freq.orderBy(F.desc("freq"), F.asc("t")).limit(1).first()

@@ -64,8 +64,8 @@ def token_build_suite(spark, sf: float, num_docs: int | None = None,
 
     from cuckoofilter_spark.sketch.aggregates import (
         cms_sketch, hll_sketch, kll_sketch)
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
     from cuckoofilter_spark.sources.tokens import tokens_table
 
     # 2M docs/sf -> ~67M tokens at sf0.1: large enough that the headline
@@ -157,7 +157,7 @@ def token_build_suite(spark, sf: float, num_docs: int | None = None,
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
     try:
         probe_fn = lambda: probes.where(  # noqa: E731
-            cuckoo_contains_col(spark, cf, "id")).count()
+            contains_col(spark, cf, "id")).count()
         fp = timed2("cf_probe", probe_fn, runs=3)
         # stall guard: steady-state slower than its own cold pass is the
         # host-stall signature (round 2 recorded 18.8s steady vs 2.8s
@@ -228,17 +228,14 @@ def filter_family_suite(spark) -> dict:
     from pyspark.sql import functions as F
 
     from cuckoofilter_spark.sketch.aggregates import (
-        blocked_bloom64_contains_col, blocked_bloom64_sketch,
-        blocked_bloom_contains_col, blocked_bloom_jvm_sketch,
-        blocked_bloom_sketch, bloom_contains_col,
-        bloom_sketch, fixed_blocked_bloom_contains_col,
-        fixed_blocked_bloom_sketch)
-    from cuckoofilter_spark.sketch.gcsfilter import gcs_build, gcs_contains_col
+        blocked_bloom64_sketch, blocked_bloom_jvm_sketch,
+        blocked_bloom_sketch, bloom_sketch, fixed_blocked_bloom_sketch)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.gcsfilter import gcs_build
     from cuckoofilter_spark.sketch.membership import (
-        blocked_bloom_jvm_filter, crate_build, crate_contains_col,
-        cuckoo_jvm_build, cuckoo_jvm_filter, shingle_build,
-        shingle_contains_col, tail_build, tail_contains_col,
-        xor_build, xor_contains_col, xorplus_build, xorplus_contains_col)
+        blocked_bloom_jvm_filter, crate_build, cuckoo_jvm_build,
+        cuckoo_jvm_filter, shingle_build, tail_build, xor_build,
+        xorplus_build)
 
     # JVM-native probes: return the FILTERED DataFrame (codegen +
     # broadcast join, no Python stage) — the loop counts them directly
@@ -297,15 +294,15 @@ def filter_family_suite(spark) -> dict:
         rows = [
             ("bloom12", lambda: bloom_sketch(keys, "id", capacity=n,
                                              bits_per_item=12, seed=SEED),
-             bloom_contains_col, n),
+             contains_col, n),
             ("blocked_bloom", lambda: blocked_bloom_sketch(
                 keys_bb, "id", capacity=n_bb, seed=SEED, bits_per_key=8),
-             blocked_bloom_contains_col, n_bb),
+             contains_col, n_bb),
             # 64-byte-block variant at the same 12.8 b/i pow2 point
             # (655360*8/512 rounds to 16384 512-bit buckets)
             ("blocked_bloom64", lambda: blocked_bloom64_sketch(
                 keys_bb, "id", capacity=n_bb, seed=SEED, bits_per_key=8),
-             blocked_bloom64_contains_col, n_bb),
+             contains_col, n_bb),
             # same 12.8 b/i point, xxhash64 key hash: the probe is pure
             # JVM (codegen + broadcast join), the one family that steps
             # around the Arrow pipe floor entirely
@@ -326,17 +323,17 @@ def filter_family_suite(spark) -> dict:
             # fixed-fpp variant: exact 12.0 b/i spend, non-pow2 directory
             ("blocked_bloom_fixed", lambda: fixed_blocked_bloom_sketch(
                 keys, "id", capacity=n, seed=SEED, bits_per_key=12),
-             fixed_blocked_bloom_contains_col, n),
+             contains_col, n),
             ("xor8", lambda: xor_build(keys, "id", fp_bits=8, seed=SEED),
-             xor_contains_col, n),
+             contains_col, n),
             ("xor16", lambda: xor_build(keys, "id", fp_bits=16, seed=SEED),
-             xor_contains_col, n),
+             contains_col, n),
             ("xorplus8", lambda: xorplus_build(keys, "id", fp_bits=8, seed=SEED),
-             xorplus_contains_col, n),
+             contains_col, n),
             # space parity row vs gcs.h's log2fpp + ~2.5 bits/key target
             # (succinct two-level offset list, kernels/gcs.py)
             ("gcs10", lambda: gcs_build(keys, "id", log2fpp=10, seed=SEED),
-             gcs_contains_col, n),
+             contains_col, n),
         ]
         # shingle row keyed near its pow2 arrays' 12/12.75 load bound
         # (shingle.h:172): 121k mean keys/shard stays 4 sigma under the
@@ -349,7 +346,7 @@ def filter_family_suite(spark) -> dict:
             ("shingle12", lambda: shingle_build(
                 keys_shingle, "id", capacity=n_shingle, slot_bits=12,
                 seed=SEED, num_shards=8),
-             shingle_contains_col, n_shingle))
+             contains_col, n_shingle))
         # adaptive tier (tail-filter.hpp): the one build with NO capacity
         # parameter — shards upsize themselves; eps here is structure-
         # derived (grows ~2^-(tb+1) per upsize past 2^lgm), bits/item is
@@ -359,12 +356,12 @@ def filter_family_suite(spark) -> dict:
         rows.append(
             ("crate", lambda: crate_build(
                 keys, "id", capacity=n, seed=SEED, num_shards=8),
-             crate_contains_col, n))
+             contains_col, n))
         rows.append(
             ("tail12", lambda: tail_build(
                 keys, "id", epsilon=2.0 ** -12, lgm=10, seed=SEED,
                 num_shards=8),
-             tail_contains_col, n))
+             contains_col, n))
         # context rows: ONE build and cold+steady probes each in sweep 1,
         # then ONE more probe per family in a second sweep minutes later —
         # host-steal episodes last multiple minutes, so two back-to-back
@@ -450,10 +447,9 @@ def figure5_suite(spark) -> dict:
 
     from pyspark.sql import functions as F
 
-    from cuckoofilter_spark.sketch.membership import (cuckoo_build,
-                                                      cuckoo_contains_col,
-                                                      shingle_build,
-                                                      shingle_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import (
+        cuckoo_build, shingle_build)
 
     n = 1_000_000
     probes_n = NEG_PROBES
@@ -472,14 +468,14 @@ def figure5_suite(spark) -> dict:
         variants = (
             ("cuckoo12", lambda: cuckoo_build(
                 keys, "id", capacity=n, seed=SEED, num_shards=8, bits=12),
-             cuckoo_contains_col),
+             contains_col),
             ("semisort13", lambda: cuckoo_build(
                 keys, "id", capacity=n, seed=SEED, num_shards=8, bits=13,
-                mode="semisort"), cuckoo_contains_col),
+                mode="semisort"), contains_col),
             # the reference's third figure-5 curve (27.2-27.4 M ops/s)
             ("shingle12", lambda: shingle_build(
                 keys, "id", capacity=n, seed=SEED, num_shards=8,
-                slot_bits=12), shingle_contains_col),
+                slot_bits=12), contains_col),
         )
         points = []
         names = []
@@ -537,10 +533,9 @@ def batchsweep_suite(spark) -> dict:
     """
     import time as _t
 
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col, xor_build, xor_contains_col)
-    from cuckoofilter_spark.sketch.aggregates import (
-        fixed_blocked_bloom_sketch, fixed_blocked_bloom_contains_col)
+    from cuckoofilter_spark.sketch.aggregates import fixed_blocked_bloom_sketch
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build, xor_build
 
     n = 1_000_000
     probes_n = NEG_PROBES
@@ -554,15 +549,15 @@ def batchsweep_suite(spark) -> dict:
     variants = (
         ("cuckoo12", lambda: cuckoo_build(
             keys, "id", capacity=n, seed=SEED, num_shards=8, bits=12),
-         cuckoo_contains_col),
+         contains_col),
         ("semisort13", lambda: cuckoo_build(
             keys, "id", capacity=n, seed=SEED, num_shards=8, bits=13,
-            mode="semisort"), cuckoo_contains_col),
+            mode="semisort"), contains_col),
         ("xor8", lambda: xor_build(keys, "id", fp_bits=8, seed=SEED),
-         xor_contains_col),
+         contains_col),
         ("blocked_bloom_fixed", lambda: fixed_blocked_bloom_sketch(
             keys, "id", capacity=n, seed=SEED, bits_per_key=12),
-         fixed_blocked_bloom_contains_col),
+         contains_col),
     )
     points = []
     try:
@@ -698,8 +693,8 @@ def task_metrics_suite(sf: float, cpus: int) -> dict:
     from cuckoofilter_spark.plans.metrics import (event_log_conf,
                                                   parse_event_log)
     from cuckoofilter_spark.session import get_spark
-    from cuckoofilter_spark.sketch.membership import (cuckoo_build,
-                                                      cuckoo_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
     from cuckoofilter_spark.sources.tokens import tokens_table
 
     log_dir = tempfile.mkdtemp(prefix="spark-events-")
@@ -714,7 +709,7 @@ def task_metrics_suite(sf: float, cpus: int) -> dict:
                           capacity=min(VOCAB, total_tokens), bits=12,
                           seed=SEED, num_shards=32, stable=True)
         probes = spark.range(VOCAB, VOCAB + NEG_PROBES)
-        fp = probes.where(cuckoo_contains_col(spark, cf, "id")).count()
+        fp = probes.where(contains_col(spark, cf, "id")).count()
         toks.unpersist()
         spark.stop()
         m = parse_event_log(log_dir)

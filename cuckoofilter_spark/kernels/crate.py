@@ -74,6 +74,8 @@ class CrateFilter:
     seeds are filter identity).
     """
 
+    PREMIX_KEYS = True  # takes simple_mix_split(key, seed), see sketch.membership
+
     def __init__(self, add_count: int, seed: int = 0):
         # crate.h:430: bucket_count = add_count / 44 (fill target 44/51)
         self.bucket_count = max(1, int(add_count) // 44)
@@ -199,6 +201,7 @@ class CrateFilter:
         return out
 
     # -- stats ------------------------------------------------------------
+    @property
     def num_items(self) -> int:
         return self.ndv
 

@@ -159,6 +159,7 @@ class CuckooFilter:
     """
 
     _BLOB_MAGIC = _MAGIC
+    PREMIX_KEYS = False  # hashes raw keys itself (see sketch.membership)
 
     @classmethod
     def key_hash64(cls, keys, seed: int) -> "np.ndarray":

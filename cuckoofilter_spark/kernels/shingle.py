@@ -69,6 +69,8 @@ class ShingleFullError(RuntimeError):
 class ShingleFilter:
     """Overlapping-bucket cuckoo filter over uint64 keys."""
 
+    PREMIX_KEYS = False  # hashes raw keys itself (see sketch.membership)
+
     def __init__(self, log2m: int, slot_bits: int = 12, seed: int = 0x5EED):
         if not 4 <= slot_bits <= 16:
             raise ValueError("slot_bits must be in [4, 16]")
@@ -404,6 +406,10 @@ class ShingleFilter:
     def bits_per_item(self) -> float:
         return 8.0 * self.size_in_bytes() / max(
             1, self.filled + self.spill.size)
+
+    @property
+    def num_items(self) -> int:
+        return self.filled
 
     def load_factor(self) -> float:
         return self.filled / (2 * self.m)

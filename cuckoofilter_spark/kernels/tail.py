@@ -68,6 +68,8 @@ class TailFilter:
     the Spark layer hashes raw keys with simple_mix_split(seed) first.
     """
 
+    PREMIX_KEYS = True  # takes simple_mix_split(key, seed), see sketch.membership
+
     def __init__(self, lgm: int = 5, epsilon: float = 1e-3, seed: int = 0):
         if not 0.0 < epsilon < 1.0:
             raise ValueError("epsilon must be in (0, 1)")
@@ -253,11 +255,22 @@ class TailFilter:
         return 8.0 * self.size_in_bytes() / max(1, self.ndv)
 
     def expected_fpp(self) -> float:
-        """Tails shorten with growth but keys lengthen in step, so the
-        per-pair match probability stays ~2^-(tb+1) of the keyed space;
-        epsilon is the design bound."""
-        return self.epsilon
+        """Structure-derived bound: sum over stored pairs of
+        2^-(key_bits + significant tail bits) plus the graduated-key
+        mass — exact for the stored content, unlike the design
+        ``epsilon`` (FPR grows one ~2^-(tb+1) term per upsize past
+        2^lgm)."""
+        total = 0.0
+        if self.pairs.size:
+            t = self.pairs & U64((1 << (self.tb + 1)) - 1)
+            lb = t & (~t + U64(1))
+            sig = self.tb - np.log2(lb.astype(np.float64))
+            total += float((2.0 ** -(self.key_bits + sig)).sum())
+        if self.bitset is not None and self.bitset.size:
+            total += float(self.bitset.sum()) / self.bitset.size
+        return total
 
+    @property
     def num_items(self) -> int:
         return self.ndv
 

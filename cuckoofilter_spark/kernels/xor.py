@@ -173,6 +173,8 @@ class XorFilter:
     serialized blob (nbit_array.h:85-124), with size_in_bytes reporting
     the packed footprint like the reference does."""
 
+    PREMIX_KEYS = False  # hashes raw keys itself (see sketch.membership)
+
     def __init__(self, block_length: int, fp_bits: int, seed: int,
                  pow2_blocks: bool = False):
         if not 4 <= fp_bits <= 32:
@@ -317,6 +319,10 @@ class XorFilter:
     def size_in_bytes(self) -> int:
         # packed footprint (what a serialized filter occupies)
         return (self.fingerprints.size * self.fp_bits + 7) // 8
+
+    @property
+    def num_items(self) -> int:
+        return self.size
 
     def bits_per_item(self) -> float:
         return 8.0 * self.size_in_bytes() / max(1, self.size)

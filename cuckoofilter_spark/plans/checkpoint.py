@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernels.cuckoo import CuckooFilter
-from ..sketch.membership import ShardedCuckooFilter
+from ..sketch.membership import ShardedFilter
 from ..sketch.udaf import keys_to_u64, require_key_col, tokens_to_u64
 
 PARTIAL_SCHEMA = "lineage string, shard int, payload binary"
@@ -121,7 +121,7 @@ def cuckoo_build_checkpointed(
     bits: int = 12,
     seed: int = 0x5EED,
     num_shards: int = 32,
-) -> ShardedCuckooFilter:
+) -> ShardedFilter:
     """Sharded cuckoo build with a stage-1 checkpoint at ``ckpt_dir``.
 
     Identical result to ``membership.cuckoo_build`` (same partial-shard
@@ -209,7 +209,7 @@ def cuckoo_build_checkpointed(
     blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
     empty = CuckooFilter.create(shard_cap, bits=bits, seed=seed).to_bytes()
     blobs = [blob_by_shard.get(s, empty) for s in range(num_shards)]
-    return ShardedCuckooFilter(blobs, bits=bits, seed=seed)
+    return ShardedFilter(CuckooFilter, blobs, seed)
 
 
 def lineage_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:

@@ -5,17 +5,23 @@ code is family-generic (benchmarks/filter-api.h:13-63: ConstructFromAddCount /
 Add / Contain specialized per Table type). This module is that adapter
 for the Spark layer: one ``build_filter(df, col, kind=...)`` entry over
 every implemented family and one ``contains_col(spark, filt, col)``
-probe that dispatches on the built object's type — so pipeline code
+probe that works on whatever the build returned — so pipeline code
 (and benchmarks) can switch families with a string, exactly like the
 reference's template parameter.
 
-Families and their Spark builders:
+Families and their Spark builders (every sharded build returns one
+``membership.ShardedFilter`` over its kernel class):
 
     cuckoo / cuckoo_semisort / cuckoo_stable  membership.cuckoo_build
-    bloom / blocked_bloom / grow_bloom        aggregates.*_sketch
+    cuckoo_jvm                                membership.cuckoo_jvm_build
+    bloom / blocked_bloom / grow_bloom / ...  aggregates.*_sketch
     xor / xorplus                             membership.xor*_build
+    xor_sharded                               membership.xor_build_sharded
     gcs                                       gcsfilter.gcs_build
     shingle / tail / crate                    membership.*_build
+
+``contains_col`` is the one broadcast probe for all of them;
+``contains_sharded`` is the no-broadcast probe for sharded filters.
 
 ``capacity=None`` is resolved the same way everywhere it is needed:
 one ``approx_count_distinct`` pre-pass with 15% headroom (callers at
@@ -199,39 +205,24 @@ def build_filter(df: DataFrame, col: str, kind: str = "cuckoo",
 
 
 def contains_col(spark: SparkSession, filt, col) -> Column:
-    """Membership probe Column for any object ``build_filter`` returns
-    (dispatch on type — the FilterAPI Contain leg)."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter, \
-        BlockedBloomFilter64, FixedBlockedBloomFilter, \
-        GrowBlockedBloomFilter, JvmBlockedBloomFilter
-    from ..kernels.bloom import BloomFilter
-    from ..kernels.gcs import GcsFilter
-    from ..kernels.xor import XorFilter
-    from ..kernels.xorplus import XorFilterPlus
-    from . import aggregates as agg, gcsfilter, membership as mem
+    """Membership probe Column for any object ``build_filter`` returns —
+    the FilterAPI Contain leg and the only public membership probe.
 
-    dispatch = (
-        (mem.ShardedCuckooFilter, mem.cuckoo_contains_col),
-        (mem.ShardedShingleFilter, mem.shingle_contains_col),
-        (mem.ShardedTailFilter, mem.tail_contains_col),
-        (mem.ShardedCrateFilter, mem.crate_contains_col),
-        (mem.ShardedXorFilter, mem.xor_sharded_contains_col),
-        (XorFilterPlus, mem.xorplus_contains_col),
-        (XorFilter, mem.xor_contains_col),
-        (GcsFilter, gcsfilter.gcs_contains_col),
-        (GrowBlockedBloomFilter, agg.grow_blocked_bloom_contains_col),
-        (BlockedBloomFilter64, agg.blocked_bloom64_contains_col),
-        (FixedBlockedBloomFilter, agg.fixed_blocked_bloom_contains_col),
-        # Jvm subclass BEFORE the base class: the base blob path would
-        # refuse the SBFV magic worker-side
-        (JvmBlockedBloomFilter, agg.blocked_bloom_jvm_contains_col),
-        (BlockedBloomFilter, agg.blocked_bloom_contains_col),
-        (BloomFilter, agg.bloom_contains_col),
-    )
-    for cls, fn in dispatch:
-        if isinstance(filt, cls):
-            return fn(spark, filt, col)
-    raise TypeError(f"no probe registered for {type(filt).__name__}")
+    Every family takes the one broadcast probe
+    (``membership._blob_method_col``): the filter is broadcast once,
+    rebuilt once per worker, and each Arrow batch is answered by the
+    object's own ``contains_many``. Single-blob kernels rebuild with
+    their class's ``from_bytes``; a ``ShardedFilter`` picks its probe
+    from the kernel class — the one-pass flat table for cuckoo and
+    shingle, one argsort shard router for the rest."""
+    from .membership import _blob_method_col
+
+    # a bare tail/crate kernel takes pre-hashed keys; only its
+    # ShardedFilter knows the seed to hash probes with
+    if (not callable(getattr(filt, "contains_many", None))
+            or getattr(filt, "PREMIX_KEYS", False)):
+        raise TypeError(f"no probe registered for {type(filt).__name__}")
+    return _blob_method_col(spark, filt, col)
 
 
 def contains_sharded(df: DataFrame, col: str, filt,
@@ -241,8 +232,9 @@ def contains_sharded(df: DataFrame, col: str, filt,
                      colocate: bool = False) -> DataFrame:
     """Shard-partitioned membership probe — the no-broadcast scale path.
 
-    Returns ``df`` + boolean ``out_col``. Works for every sharded
-    family (cuckoo/shingle/tail/crate/xor_sharded); with a blob
+    Returns ``df`` + boolean ``out_col``. Works for every
+    ``ShardedFilter`` (cuckoo/cuckoo_jvm/shingle/tail/crate/xor_sharded
+    builds) and answers bit-identically to ``contains_col``; with a blob
     ``store`` (shared-FS path; auto temp dir in local mode) per-worker
     filter memory is bounded by ``max_cached_shards`` and
     ``colocate=True`` bounds each task to O(1) shards — regardless of

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..kernels.dysect import QuotientMultimap
-from .membership import _cached_probe, shard_of
+from .membership import _cached_probe, shard_groups
 from .udaf import keys_to_u64, require_key_col
 
 
@@ -51,27 +51,20 @@ class ShardedMultimap:
         counts = np.zeros(keys.size, dtype=np.int64)
         if not keys.size:
             return counts, np.empty(0, dtype=np.uint64)
-        sh = shard_of(keys, self.num_shards)
-        order = np.argsort(sh, kind="stable")
-        bounds = np.searchsorted(sh[order], np.arange(self.num_shards + 1))
-        vals_by_probe: list[np.ndarray | None] = [None] * self.num_shards
-        for s in range(self.num_shards):
-            seg = order[bounds[s]:bounds[s + 1]]
-            if not seg.size:
-                continue
+        groups = list(shard_groups(keys, self.num_shards))
+        vals_by_group = []
+        for s, seg in groups:
             c, flat = self._map(s).get_many(keys[seg])
             counts[seg] = c
-            vals_by_probe[s] = flat
+            vals_by_group.append(flat)
         # scatter flat values back to input order: one pass building
         # the destination offsets of every (probe, value) pair
         cum = np.zeros(keys.size + 1, dtype=np.int64)
         np.cumsum(counts, out=cum[1:])
         flat_out = np.empty(cum[-1], dtype=np.uint64)
-        for s in range(self.num_shards):
-            flat = vals_by_probe[s]
-            if flat is None or not flat.size:
+        for (_, seg), flat in zip(groups, vals_by_group):
+            if not flat.size:
                 continue
-            seg = order[bounds[s]:bounds[s + 1]]
             lens = counts[seg]
             tot = int(lens.sum())
             scum = np.zeros(seg.size, dtype=np.int64)
@@ -116,17 +109,12 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
             vs.append(keys_to_u64(pdf["v"]))
         keys = np.concatenate(ks) if ks else np.empty(0, dtype=np.uint64)
         vals = np.concatenate(vs) if vs else np.empty(0, dtype=np.uint64)
-        sh = shard_of(keys, num_shards)
-        order = np.argsort(sh, kind="stable")
-        bounds = np.searchsorted(sh[order], np.arange(num_shards + 1))
         shards, blobs = [], []
-        for s in range(num_shards):
-            seg = order[bounds[s]:bounds[s + 1]]
-            if seg.size:
-                inter = np.empty(2 * seg.size, dtype=np.uint64)
-                inter[0::2], inter[1::2] = keys[seg], vals[seg]
-                shards.append(s)
-                blobs.append(inter.tobytes())
+        for s, seg in shard_groups(keys, num_shards):
+            inter = np.empty(2 * seg.size, dtype=np.uint64)
+            inter[0::2], inter[1::2] = keys[seg], vals[seg]
+            shards.append(s)
+            blobs.append(inter.tobytes())
         yield pd.DataFrame({"shard": pd.Series(shards, dtype="int32"),
                             "pairs": blobs})
 

@@ -48,27 +48,6 @@ def _shard_fname(s: int) -> str:
     return f"shard_{s:05d}.blob"
 
 
-def _loader(kind: str):
-    """from_bytes constructor per family — import-lazy so the store
-    module never drags every kernel into a worker that probes one."""
-    if kind == "cuckoo":
-        from ..kernels.cuckoo import CuckooFilter
-        return CuckooFilter.from_bytes
-    if kind == "shingle":
-        from ..kernels.shingle import ShingleFilter
-        return ShingleFilter.from_bytes
-    if kind == "tail":
-        from ..kernels.tail import TailFilter
-        return TailFilter.from_bytes
-    if kind == "crate":
-        from ..kernels.crate import CrateFilter
-        return CrateFilter.from_bytes
-    if kind == "xor":
-        from ..kernels.xor import XorFilter
-        return XorFilter.from_bytes
-    raise ValueError(f"no store loader for filter kind {kind!r}")
-
-
 class ShardBlobStore:
     """A persisted sharded filter: N blob files + a manifest.
 
@@ -80,8 +59,12 @@ class ShardBlobStore:
     """
 
     def __init__(self, path: str, manifest: dict):
+        from .membership import _shard_kinds
+
         self.path = path
         self.kind = manifest["kind"]
+        if self.kind not in _shard_kinds():
+            raise ValueError(f"{path}: unknown sharded filter kind {self.kind!r}")
         self.seed = int(manifest["seed"])
         self.num_shards = int(manifest["num_shards"])
         self.store_id = manifest["store_id"]
@@ -97,13 +80,11 @@ class ShardBlobStore:
 
     @classmethod
     def write(cls, filt, path: str | None = None) -> "ShardBlobStore":
-        """Persist a Sharded* filter (driver-side; blobs are already on
-        the driver). Idempotent: same content at ``path`` is kept,
+        """Persist a ``ShardedFilter`` (driver-side; blobs are already
+        on the driver). Idempotent: same content at ``path`` is kept,
         different content raises rather than silently overwriting."""
-        from .membership import _shard_probe_kind
-
-        kind = _shard_probe_kind(filt)
-        seed = int(getattr(filt, "seed", 0))
+        kind = filt.kind
+        seed = int(filt.seed)
         shas = [hashlib.sha256(b).hexdigest() for b in filt.blobs]
         store_id = cls._content_id(kind, seed, shas)
         if path is None:
@@ -148,7 +129,7 @@ class ShardBlobStore:
 _WORKER_LRU: OrderedDict = OrderedDict()
 
 
-def _load_shard(path: str, store_id: str, kind: str, shard: int,
+def _load_shard(path: str, store_id: str, kernel_cls, shard: int,
                 cap: int, sha: str):
     key = (store_id, shard)
     f = _WORKER_LRU.get(key)
@@ -161,7 +142,7 @@ def _load_shard(path: str, store_id: str, kind: str, shard: int,
         raise IOError(
             f"shard {shard} at {path} does not match its manifest sha — "
             "the store was modified after writing")
-    f = _loader(kind)(blob)
+    f = kernel_cls.from_bytes(blob)
     _WORKER_LRU[key] = f
     while len(_WORKER_LRU) > max(1, cap):
         _WORKER_LRU.popitem(last=False)
@@ -194,26 +175,18 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     seed, num_shards = store.seed, store.num_shards
     shas = list(store.shard_sha)
     cap = num_shards if max_cached_shards is None else int(max_cached_shards)
-    premix = kind in ("tail", "crate")
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from ..kernels.hashing import simple_mix_split
-        from .membership import shard_of
+        from .membership import _kernel_keys, _shard_kinds, shard_groups
 
+        kernel_cls = _shard_kinds()[kind]
         for s_ser in it:
             ks = keys_to_u64(s_ser)
-            sh = shard_of(ks, num_shards)
-            pk = simple_mix_split(ks, seed) if premix else ks
+            pk = _kernel_keys(kernel_cls, ks, seed)
             hit = np.zeros(ks.size, dtype=bool)
-            order = np.argsort(sh, kind="stable")
-            bounds = np.searchsorted(sh[order], np.arange(num_shards + 1))
-            for s in range(num_shards):
-                lo, hi = int(bounds[s]), int(bounds[s + 1])
-                if lo == hi:
-                    continue
-                idx = order[lo:hi]
-                f = _load_shard(path, store_id, kind, s, cap, shas[s])
+            for s, idx in shard_groups(ks, num_shards):
+                f = _load_shard(path, store_id, kernel_cls, s, cap, shas[s])
                 hit[idx] = f.contains_many(pk[idx])
             yield pd.Series(hit)
 

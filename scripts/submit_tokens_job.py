@@ -42,8 +42,8 @@ def main() -> int:
 
     from cuckoofilter_spark.sketch.aggregates import (
         cms_sketch, hll_sketch, kll_sketch)
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
     from cuckoofilter_spark.sources.tokens import tokens_table
 
     vocab = 50_000
@@ -63,13 +63,13 @@ def main() -> int:
     # no false negatives: every distinct token must probe positive
     distinct = toks.select(F.explode("tokens").alias("t")).distinct().persist()
     n_distinct = distinct.count()
-    n_hit = distinct.where(cuckoo_contains_col(spark, cf, "t")).count()
+    n_hit = distinct.where(contains_col(spark, cf, "t")).count()
     checks["no_false_negatives"] = n_hit == n_distinct
 
     # FPR at or below the 12-bit bound on a disjoint probe range
     probes_n = 2_000_000
     neg = spark.range(vocab, vocab + probes_n)
-    fp = neg.where(cuckoo_contains_col(spark, cf, "id")).count()
+    fp = neg.where(contains_col(spark, cf, "id")).count()
     fpp_bound = cf.expected_fpp()
     checks["fpr_within_bound"] = fp / probes_n <= fpp_bound
 

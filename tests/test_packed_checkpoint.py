@@ -97,8 +97,8 @@ def test_checkpoint_build_and_resume(spark, ckpt_dir):
         spark, li, "l_partkey", ckpt_dir, capacity=1000, bits=12, seed=7,
         num_shards=8)
     pos = li.select(F.col("l_partkey").alias("k")).distinct()
-    from cuckoofilter_spark.sketch.membership import cuckoo_contains_col
-    assert pos.where(~cuckoo_contains_col(spark, cf1, "k")).count() == 0
+    from cuckoofilter_spark.sketch.api import contains_col
+    assert pos.where(~contains_col(spark, cf1, "k")).count() == 0
 
     # resume: stage 1 must be skipped (source df is WRONG on purpose —
     # the checkpoint, not the source, must feed the rebuild)

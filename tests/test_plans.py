@@ -95,15 +95,15 @@ def test_probe_filter_stays_in_scan_pipeline(spark):
     """A membership probe is a filter column over the scan — no exchange
     is introduced by probing (the filter blobs ride a broadcast, not a
     join)."""
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_build, cuckoo_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_build
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").where(
         F.col("l_partkey") < 1000)
     filt = cuckoo_build(li, "l_partkey", capacity=1000, bits=12, seed=7,
                         num_shards=8)
     part = spark.read.parquet(f"{SF_DIR}/part.parquet")
-    probed = part.where(cuckoo_contains_col(spark, filt, "p_partkey"))
+    probed = part.where(contains_col(spark, filt, "p_partkey"))
     plan = _plan(probed)
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan  # the vectorized probe UDF

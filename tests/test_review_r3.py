@@ -173,22 +173,22 @@ def test_shingle_kick_overflow_spills_not_drops(monkeypatch):
 
 def test_shingle_sharded_probe_sees_spill(spark, monkeypatch):
     from cuckoofilter_spark.kernels import shingle as shingle_mod
-    from cuckoofilter_spark.sketch.membership import (
-        ShardedShingleFilter, shingle_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import ShardedFilter
 
     monkeypatch.setattr(shingle_mod, "MAX_KICKS", 2)
     from cuckoofilter_spark.kernels.shingle import MAX_LOAD, ShingleFilter
 
     f = ShingleFilter(10, 12, 0x5EED)
     cap = int(MAX_LOAD * 2 * f.m)
-    # ShardedShingleFilter(num_shards=1) routes every key to shard 0
+    # ShardedFilter(num_shards=1) routes every key to shard 0
     keys = _hashes(3 * cap)[:cap]
     f.add_many(keys, raise_on_full=False)
     assert f.spill.size > 0
-    sharded = ShardedShingleFilter([f.to_bytes()], slot_bits=12, seed=0x5EED)
+    sharded = ShardedFilter(ShingleFilter, [f.to_bytes()], 0x5EED)
     df = spark.createDataFrame(
         [(int(k),) for k in keys.view(np.int64)[:200]], "k long")
-    hits = df.where(shingle_contains_col(spark, sharded, "k")).count()
+    hits = df.where(contains_col(spark, sharded, "k")).count()
     assert hits == 200
 
 def test_shingle_spill_multiset_delete():

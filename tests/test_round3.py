@@ -112,8 +112,8 @@ def test_shingle_build_deterministic_and_merge_commutative():
 def test_shingle_sharded_build_spark(spark):
     from pyspark.sql import functions as F
 
-    from cuckoofilter_spark.sketch.membership import (
-        shingle_build, shingle_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import shingle_build
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet") \
         .where(F.col("l_partkey") < 800)
@@ -121,7 +121,7 @@ def test_shingle_sharded_build_spark(spark):
                          seed=0x5EED, num_shards=4)
     part = spark.read.parquet("/root/testdata/sf0.001/part.parquet")
     got = {r[0] for r in part.where(
-        shingle_contains_col(spark, filt, "p_partkey"))
+        contains_col(spark, filt, "p_partkey"))
         .select("p_partkey").collect()}
     want = {r[0] for r in li.select("l_partkey").distinct().collect()
             if r[0] is not None}
@@ -131,7 +131,7 @@ def test_shingle_sharded_build_spark(spark):
     some = np.array(sorted(want)[:100], dtype=np.uint64)
     assert filt.delete_u64(some).all()
     got2 = {r[0] for r in part.where(
-        shingle_contains_col(spark, filt, "p_partkey"))
+        contains_col(spark, filt, "p_partkey"))
         .select("p_partkey").collect()}
     assert got2 == ((want - set(some.tolist())) & present)
 
@@ -359,8 +359,8 @@ def test_tail_merge_associative():
 def test_tail_no_capacity_spark_build(spark):
     """Sharded Spark build with NO capacity parameter; no false
     negatives, structure-derived FPR bound respected on fresh keys."""
-    from cuckoofilter_spark.sketch.membership import (
-        tail_build, tail_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import tail_build
 
     import pandas as pd
     n = 30_000
@@ -369,7 +369,7 @@ def test_tail_no_capacity_spark_build(spark):
     filt = tail_build(df, "k", epsilon=2.0 ** -16, lgm=10, seed=0x5EED)
     probe_df = spark.createDataFrame(pd.DataFrame(
         {"k": np.arange(1, 2 * n + 1, dtype=np.int64)}))
-    got = (probe_df.withColumn("hit", tail_contains_col(spark, filt, "k"))
+    got = (probe_df.withColumn("hit", contains_col(spark, filt, "k"))
            .where("hit").select("k").toPandas()["k"].to_numpy())
     present = set(range(1, n + 1))
     assert present <= set(got.tolist())          # no false negatives
@@ -466,8 +466,8 @@ def test_crate_merge_and_incremental():
 def test_crate_spark_build(spark):
     import pandas as pd
 
-    from cuckoofilter_spark.sketch.membership import (
-        crate_build, crate_contains_col)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import crate_build
 
     n = 40_000
     df = spark.createDataFrame(pd.DataFrame(
@@ -475,7 +475,7 @@ def test_crate_spark_build(spark):
     filt = crate_build(df, "k", capacity=n, seed=0x5EED)
     probe_df = spark.createDataFrame(pd.DataFrame(
         {"k": np.arange(1, 2 * n + 1, dtype=np.int64)}))
-    got = (probe_df.withColumn("hit", crate_contains_col(spark, filt, "k"))
+    got = (probe_df.withColumn("hit", contains_col(spark, filt, "k"))
            .where("hit").select("k").toPandas()["k"].to_numpy())
     present = set(range(1, n + 1))
     assert present <= set(got.tolist())

@@ -454,13 +454,12 @@ def test_jvm_cuckoo_victim_and_null(spark):
     mirror rows; NULL keys never match but flag rows are kept."""
     from cuckoofilter_spark.kernels.cuckoo import JvmCuckooFilter
     from cuckoofilter_spark.sketch.membership import (
-        ShardedCuckooFilter, cuckoo_jvm_filter, cuckoo_jvm_flag)
+        ShardedFilter, cuckoo_jvm_filter, cuckoo_jvm_flag)
 
     f = JvmCuckooFilter.create(240, bits=12, seed=7)
     f.add_many(np.arange(5000, dtype=np.uint64), raise_on_full=False)
     assert f.victim_used
-    w = ShardedCuckooFilter([f.to_bytes()], bits=12, seed=7,
-                            kernel_cls=JvmCuckooFilter)
+    w = ShardedFilter(JvmCuckooFilter, [f.to_bytes()], 7)
     probes = np.arange(6000, dtype=np.int64)
     expect = w.contains_u64(probes.view(np.uint64))
     pdf = spark.createDataFrame([(int(x),) for x in probes], "k long")
@@ -496,7 +495,7 @@ def test_jvm_cuckoo_plan_is_pure_jvm(spark):
 def test_jvm_cuckoo_guards(spark):
     from cuckoofilter_spark.kernels.cuckoo import CuckooFilter, JvmCuckooFilter
     from cuckoofilter_spark.sketch.membership import (
-        ShardedCuckooFilter, cuckoo_build, cuckoo_jvm_build,
+        cuckoo_build, cuckoo_jvm_build,
         cuckoo_jvm_filter, cuckoo_jvm_flag)
 
     filt, _, _ = _jvm_cf(spark)
@@ -533,18 +532,18 @@ def test_jvm_cuckoo_guards(spark):
 
 
 def test_jvm_cuckoo_pandas_path_matches_jvm_path(spark):
-    """The pandas blob probe (cuckoo_contains_col now threads the
+    """The pandas blob probe (contains_col now threads the
     kernel class by name) and the JVM semi-join agree on the same
     sharded JVM filter."""
-    from cuckoofilter_spark.sketch.membership import (
-        cuckoo_contains_col, cuckoo_jvm_filter)
+    from cuckoofilter_spark.sketch.api import contains_col
+    from cuckoofilter_spark.sketch.membership import cuckoo_jvm_filter
 
     filt, members, rng = _jvm_cf(spark, bits=12, n=20000)
     probes = np.unique(np.concatenate([
         members[:3000], rng.integers(0, 1 << 62, 20000, dtype=np.int64)]))
     pdf = spark.createDataFrame([(int(x),) for x in probes], "k long")
     via_pandas = {r["k"] for r in pdf.withColumn(
-        "hit", cuckoo_contains_col(spark, filt, "k")).where("hit").collect()}
+        "hit", contains_col(spark, filt, "k")).where("hit").collect()}
     via_jvm = {r["k"] for r in cuckoo_jvm_filter(spark, filt, pdf, "k").collect()}
     assert via_pandas == via_jvm
     assert {int(m) for m in members[:3000]} <= via_jvm  # no false negatives

@@ -11,18 +11,17 @@ from pyspark.sql import functions as F
 
 from cuckoofilter_spark.kernels.hashing import splitmix64_seq
 from cuckoofilter_spark.sketch.aggregates import (
-    bloom_contains_col,
     bloom_sketch,
     cms_lookup_col,
     cms_sketch,
     hll_sketch,
     kll_sketch,
 )
+from cuckoofilter_spark.sketch.api import contains_col
 from cuckoofilter_spark.sketch.membership import (
     approx_anti_join,
     approx_semi_join,
     cuckoo_build,
-    cuckoo_contains_col,
 )
 from cuckoofilter_spark.sources.tokens import tokens_table
 
@@ -48,7 +47,7 @@ def test_cuckoo_build_and_probe_lineitem(spark, sf_dir):
     true_keys = {r[0] for r in li.select("l_partkey").distinct().collect()}
     assert filt.num_items() == len(true_keys)
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    got = part.withColumn("hit", cuckoo_contains_col(spark, filt, "p_partkey"))
+    got = part.withColumn("hit", contains_col(spark, filt, "p_partkey"))
     rows = got.select("p_partkey", "hit").collect()
     # no false negatives, FPs bounded
     fn = [r for r in rows if r["p_partkey"] in true_keys and not r["hit"]]
@@ -63,13 +62,13 @@ def test_cuckoo_tokens_membership(spark, toks):
         capacity=5000, bits=12, seed=3, num_shards=4)
     # every distinct token must be found (vocab 5000, all present at 2000 docs)
     probe = spark.range(5000).withColumn(
-        "hit", cuckoo_contains_col(spark, filt, "id"))
+        "hit", contains_col(spark, filt, "id"))
     present = {r[0] for r in toks.select(F.explode("tokens")).distinct().collect()}
     miss = probe.where(~F.col("hit")).select("id").collect()
     assert all(r["id"] not in present for r in miss)
     # absent range: FP rate within bound (deterministic seed; generous 5x slack)
     absent = spark.range(1_000_000, 1_100_000).withColumn(
-        "hit", cuckoo_contains_col(spark, filt, "id"))
+        "hit", contains_col(spark, filt, "id"))
     fpr = absent.where("hit").count() / 100_000
     assert fpr <= 5 * filt.expected_fpp()
 
@@ -149,7 +148,7 @@ def test_bloom_spark_build(spark, sf_dir):
     sk = bloom_sketch(li, "l_partkey", capacity=2000, bits_per_item=12, seed=5)
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     present = {r[0] for r in li.select("l_partkey").distinct().collect()}
-    rows = part.withColumn("hit", bloom_contains_col(spark, sk, "p_partkey")).collect()
+    rows = part.withColumn("hit", contains_col(spark, sk, "p_partkey")).collect()
     assert all(r["hit"] for r in rows if r["p_partkey"] in present)
 
 
